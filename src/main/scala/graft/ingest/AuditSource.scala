@@ -1,10 +1,15 @@
 package graft.ingest
 
 import java.time.LocalDate
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 import org.slf4j.LoggerFactory
+import graft.sources.AuditMicroBatchStream
 
 /** One dated partition of the audit source: the day and its directory. */
 final case class DayPartition(day: LocalDate, path: String)
@@ -14,10 +19,11 @@ final case class DayPartition(day: LocalDate, path: String)
   *
   * The reference shells out to `hdfs dfs -ls -C` and filters dir names in
   * Python (:134-148). Here the listing is a single `FileSystem.listStatus`
-  * RPC on the driver (works for file://, hdfs://, s3a:// alike) and the
-  * data itself is read by executors straight from the source — the
+  * RPC on the driver (works for file://, hdfs://, s3a:// alike), and each
+  * day's files are listed there too ([[listFiles]]); the data itself is
+  * read by executors straight from the source ([[readFile]]) — the
   * reference's whole-day copyToLocal staging step (:153-166) is dropped by
-  * design; Spark tasks stream their own splits.
+  * design.
   */
 object AuditSource {
   private val log = LoggerFactory.getLogger(getClass)
@@ -57,65 +63,73 @@ object AuditSource {
   def pendingDays(spark: SparkSession, srcDir: String, watermark: Option[LocalDate]): Seq[DayPartition] =
     listDays(spark, srcDir).filter(d => Watermark.isPending(d.day, watermark))
 
-  /** Read one day's files as a DataFrame of `(path string, content binary)`.
-    *
-    * binaryFile packs many small files per task up to
-    * `spark.sql.files.maxPartitionBytes` — at 100 TB this parallelises by
-    * bytes automatically, with no shuffle and no local staging. Recursive,
-    * matching the reference's `os.walk` (audit_data_ingest.py:83).
-    *
-    * Caveat: Spark's file scan silently drops zero-length files, but the
-    * reference processes them (zlib.compress(b"") is valid) — so empties
-    * are re-listed on the driver and unioned in as literal rows. Empty
-    * files carry no bytes, so this adds only O(#empty paths) driver work,
-    * on top of the driver-side listing every file source already does.
+  /** Every regular file under `dir`, recursively, as `(path, length)` —
+    * zero-length and `_`/`.`-prefixed names included, like the
+    * reference's `os.walk` (audit_data_ingest.py:83). One
+    * `FileSystem.listStatus` RPC per directory; the one listing rule of
+    * every ingest mode.
     */
-  def readDay(spark: SparkSession, dayDir: String): DataFrame = {
-    val nonEmpty = spark.read
-      .format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(dayDir)
-      .select("path", "content")
-    val p = new Path(dayDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, /* recursive = */ true)
-    val empties = Iterator
-      .continually(it)
-      .takeWhile(_.hasNext)
-      .map(_.next())
-      .filter(st => st.isFile && st.getLen == 0)
-      .map(_.getPath.toString)
-      .toSeq
-    if (empties.isEmpty) nonEmpty
-    else {
-      import spark.implicits._
-      nonEmpty.unionAll(
-        empties.toDF("path").withColumn("content", lit(Array.emptyByteArray))
-      )
+  def listFiles(conf: Configuration, dir: String): Seq[(String, Long)] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def walk(p: Path): Iterator[(String, Long)] = fs.listStatus(p).iterator.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.isFile) Iterator.single((st.getPath.toString, st.getLen))
+      else Iterator.empty
     }
+    walk(root).toVector
   }
 
-  /** Scale-path variant: ALL pending days in one logical scan, with a
-    * `day` column — lets one Spark job cover the whole backlog instead of
-    * a day-at-a-time driver loop ([[IngestJob.runBacklog]] commits its
-    * watermark from this, day-ordered; manifest/analytics queries use it
-    * too). Built as a union of per-day [[readDay]] scans with a LITERAL
-    * day, so nested files attribute to the right day (a parent-dir parse
-    * would name the subdirectory) and zero-length files are kept. Driver
-    * cost is one listing per pending day — the same as the day-loop pays;
-    * a multi-year backlog (1000s of days) should be chunked by the caller
-    * into bounded runs, which the day-ordered watermark makes safe.
+  /** The files of `days` as `(path, length, epochDay)` — the shape
+    * [[graft.sources.AuditMicroBatchStream.binPack]] packs.
     */
-  def readPending(spark: SparkSession, srcDir: String, watermark: Option[LocalDate]): DataFrame = {
-    val days = pendingDays(spark, srcDir, watermark)
-    if (days.isEmpty) {
-      spark.read.format("binaryFile").load(srcDir).limit(0)
-        .select(col("path"), col("content"))
-        .withColumn("day", lit(null).cast("date"))
-    } else {
-      days
-        .map(dp => readDay(spark, dp.path).withColumn("day", lit(java.sql.Date.valueOf(dp.day))))
-        .reduce(_.unionAll(_))
+  def listFiles(conf: Configuration, days: Seq[DayPartition]): Seq[(String, Long, Int)] =
+    days.flatMap { dp =>
+      val epochDay = dp.day.toEpochDay.toInt
+      listFiles(conf, dp.path).map { case (path, len) => (path, len, epochDay) }
     }
+
+  /** Read one listed file whole (the reference reads whole files too,
+    * audit_data_ingest.py:118). Fails loudly past the JVM array limit or
+    * when the file shrank since it was listed, rather than truncating.
+    */
+  def readFile(conf: Configuration, pathStr: String, len: Long): Array[Byte] = {
+    require(len <= Int.MaxValue, s"$pathStr is $len bytes — exceeds the 2 GiB single-row limit")
+    val path = new Path(pathStr)
+    val buf = new Array[Byte](len.toInt)
+    val in = path.getFileSystem(conf).open(path)
+    try {
+      var off = 0
+      while (off < buf.length) {
+        val n = in.read(buf, off, buf.length - off)
+        if (n < 0) throw new java.io.EOFException(s"$pathStr truncated at $off/${buf.length}")
+        off += n
+      }
+    } finally in.close()
+    buf
+  }
+
+  /** Listed files bin-packed by bytes into at most `defaultParallelism`
+    * partitions; the driver ships `(path, length, epochDay)` only.
+    */
+  def parallelize(sc: SparkContext, files: Seq[(String, Long, Int)]): RDD[(String, Long, Int)] = {
+    val n = sc.defaultParallelism
+    val cap = math.max(1L, (files.iterator.map(_._2).sum + n - 1) / n)
+    val bins = AuditMicroBatchStream.binPack(files, cap)
+    sc.parallelize(bins.toSeq, math.max(1, math.min(n, bins.length))).flatMap(identity)
+  }
+
+  /** One day's files as a DataFrame of `(path string, content binary)`,
+    * over the same listing and reader as the ingest modes.
+    */
+  def readDay(spark: SparkSession, dayDir: String): DataFrame = {
+    val sc = spark.sparkContext
+    val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+    val files = listFiles(sc.hadoopConfiguration, dayDir).map { case (path, len) => (path, len, 0) }
+    val rows = parallelize(sc, files).map { case (path, len, _) => Row(path, readFile(conf.value, path, len)) }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("path", StringType, nullable = false),
+      StructField("content", BinaryType, nullable = false)
+    )))
   }
 }

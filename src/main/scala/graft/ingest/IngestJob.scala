@@ -1,8 +1,11 @@
 package graft.ingest
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import org.slf4j.LoggerFactory
+import scala.collection.mutable
 
 /** Engine config — the reference's 11 CLI args minus the ones Spark makes
   * obsolete (tmp dir, process count; audit_data_ingest.py:236-285).
@@ -84,17 +87,22 @@ final case class IngestSummary(days: Seq[DayResult]) {
   *    standard retry mode (:190-197).
   *
   * Scale notes (100 TB posture): no driver-side staging or collect of
-  * content — executors read their own binaryFile splits and upload from
-  * `mapPartitions`; only ONE aggregated status row per task comes back to
-  * the driver (counts + a bounded failure sample), so the gather is
-  * O(#tasks) regardless of file count. Parallelism = source bytes /
-  * `spark.sql.files.maxPartitionBytes`, no shuffle anywhere in the plan.
+  * content — the driver lists each day once (path and length only) and
+  * ships that listing, bin-packed by bytes, as ONE RDD job per day; the
+  * executors read and upload the files from `mapPartitions`, and only
+  * ONE aggregated status row per task comes back (counts + a bounded
+  * failure sample), so the gather is O(#tasks) regardless of file count.
+  * No DataFrame, file-source scan or Catalyst plan is built per day, and
+  * there is no shuffle anywhere.
   */
 object IngestJob {
   private val log = LoggerFactory.getLogger(getClass)
 
   /** Max failure rows reported per task (and overall per day). */
   val MaxFailureSamples = 20
+
+  /** One day's upload outcome: (ok count, failed count, failure sample). */
+  private type Tally = (Long, Long, Seq[FileResult])
 
   def run(spark: SparkSession, cfg: IngestConfig): IngestSummary = {
     val watermark = Watermark.read(cfg.progressFile)
@@ -120,12 +128,15 @@ object IngestJob {
     * watermark still committed in day order. The reference's loop
     * (audit_data_ingest.py:50-68) schedules one job per day; with a long
     * backlog of small days that pays per-job scheduling overhead per day
-    * and caps parallelism at one day's bytes. Here all pending days scan
-    * together ([[AuditSource.readPending]]), statuses aggregate
-    * executor-side PER DAY (one tiny `(day, counts, samples)` row per
-    * task×day), and the driver then walks days oldest-first committing the
-    * watermark for each clean day until the first dirty one, which aborts
-    * the run exactly like the loop.
+    * and caps parallelism at one day's bytes. Here the files of all
+    * pending days are listed on the driver and packed into one job,
+    * statuses aggregate executor-side PER DAY (one tiny
+    * `(day, counts, samples)` row per task×day), and the driver then walks
+    * days oldest-first committing the watermark for each clean day until
+    * the first dirty one, which aborts the run exactly like the loop.
+    * Driver state is the listing of every pending day, so a multi-year
+    * backlog should be chunked by the caller into bounded runs, which the
+    * day-ordered watermark makes safe.
     *
     * Documented divergences from the sequential loop, both safe under
     * at-least-once:
@@ -141,26 +152,17 @@ object IngestJob {
     val watermark = Watermark.read(cfg.progressFile)
     val days = AuditSource.pendingDays(spark, cfg.srcDir, watermark)
     log.info(s"Watermark=$watermark; ${days.size} pending day(s) in one backlog job")
-    if (days.isEmpty) return IngestSummary(Nil)
-    import spark.implicits._
-    val srcRootNorm = new org.apache.hadoop.fs.Path(cfg.srcDir).toUri.getPath
-    val files = AuditSource
-      .readPending(spark, cfg.srcDir, watermark)
-      .select(org.apache.spark.sql.functions.col("path"), org.apache.spark.sql.functions.col("content"),
-        org.apache.spark.sql.functions.col("day").cast("string"))
-      .as[(String, Array[Byte], String)]
-    val perDay = uploadFilesPerDay(files, cfg, dayStr => s"$srcRootNorm/$dayStr")
-    val results = scala.collection.mutable.ArrayBuffer[DayResult]()
+    val perDay = uploadDays(spark, cfg, days)
+    val results = mutable.ArrayBuffer[DayResult]()
     for (dp <- days) {
-      val (ok, failed, samples) = perDay.getOrElse(dp.day.toString, (0L, 0L, Seq.empty[FileResult]))
-      val dayResult = DayResult(dp.day, filesOk = ok, filesFailed = failed, failureSamples = samples)
+      val dayResult = dayResultOf(perDay, dp)
       results += dayResult
       if (dayResult.ok) {
         Watermark.commit(cfg.progressFile, dp.day)
       } else {
-        val detail = samples.map(f => s"${f.path}: ${f.error}").mkString("; ")
+        val detail = dayResult.failureSamples.map(f => s"${f.path}: ${f.error}").mkString("; ")
         throw new RuntimeException(
-          s"Failed to process day ${dp.day} ($failed file(s) failed): $detail " +
+          s"Failed to process day ${dp.day} (${dayResult.filesFailed} file(s) failed): $detail " +
             "(watermark held at the last clean day; later days re-run on retry)"
         )
       }
@@ -172,7 +174,7 @@ object IngestJob {
     * back to the basename if the prefix does not match (foreign URI form).
     */
   private[ingest] def relativePath(dayDirNorm: String, filePath: String): String = {
-    val norm = new org.apache.hadoop.fs.Path(filePath).toUri.getPath
+    val norm = new Path(filePath).toUri.getPath
     if (norm.startsWith(dayDirNorm + "/")) norm.substring(dayDirNorm.length + 1)
     else norm.substring(norm.lastIndexOf('/') + 1)
   }
@@ -194,7 +196,7 @@ object IngestJob {
     val keyId = cfg.masterKeyId
     val pubB64 = cfg.wrappingKeyB64()
     val mode = cfg.aesMode
-    val dayDirNorm = new org.apache.hadoop.fs.Path(dp.path).toUri.getPath
+    val dayDirNorm = new Path(dp.path).toUri.getPath
     AuditSource
       .readDay(spark, dp.path)
       .as[(String, Array[Byte])]
@@ -217,131 +219,107 @@ object IngestJob {
   /** One day = one Spark job; every file attempted, statuses aggregated
     * executor-side (ok/failed counts + first-N failure samples per task).
     */
-  def processDay(spark: SparkSession, cfg: IngestConfig, dp: DayPartition): DayResult = {
-    import spark.implicits._
-    val dayStr = dp.day.toString
-    val files = AuditSource
-      .readDay(spark, dp.path)
-      .as[(String, Array[Byte])]
-      .map { case (path, content) => (path, content, dayStr) }
-    val (ok, failed, samples, _) = uploadFiles(files, cfg, dayDirFor(dp.path, dayStr))
+  def processDay(spark: SparkSession, cfg: IngestConfig, dp: DayPartition): DayResult =
+    dayResultOf(uploadDays(spark, cfg, Seq(dp)), dp)
+
+  private def dayResultOf(perDay: Map[String, Tally], dp: DayPartition): DayResult = {
+    val (ok, failed, samples) = perDay.getOrElse(dp.day.toString, (0L, 0L, Nil))
     DayResult(dp.day, filesOk = ok, filesFailed = failed, failureSamples = samples)
   }
 
-  /** Normalized day-directory path used to relativize file paths into
-    * object keys. `dayDir` already names the day's directory here; the
-    * streaming path derives it as `srcRoot/dayStr` instead.
+  /** Upload every file of `days` in ONE `parallelize(...).mapPartitions`
+    * job over the driver's listing ([[AuditSource.listFiles]]), bin-packed
+    * by bytes ([[AuditSource.parallelize]]). Each file is read inside the
+    * kernel's per-file `try`, so a file that vanished since the listing
+    * fails its day, not its task. Days with no files run no job.
     */
-  private def dayDirFor(dayDir: String, dayStr: String): String => String = {
-    val norm = new org.apache.hadoop.fs.Path(dayDir).toUri.getPath
-    require(norm.endsWith("/" + dayStr) || norm == dayStr, s"day dir $norm does not match day $dayStr")
-    _ => norm
+  private def uploadDays(spark: SparkSession, cfg: IngestConfig, days: Seq[DayPartition]): Map[String, Tally] = {
+    val sc = spark.sparkContext
+    val files = AuditSource.listFiles(sc.hadoopConfiguration, days)
+    if (files.isEmpty) return Map.empty
+    val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+    val kernel = uploadKernel(cfg, days.map(dp => dp.day.toString -> new Path(dp.path).toUri.getPath).toMap)
+    val perTask = AuditSource.parallelize(sc, files).mapPartitions { it =>
+      kernel(it.map { case (path, len, epochDay) =>
+        (path, LocalDate.ofEpochDay(epochDay).toString, () => AuditSource.readFile(conf.value, path, len))
+      })
+    }
+    mergeDays(perTask.collect())
   }
 
-  /** Executor-side encrypt+upload over `(path, content, dayStr)` rows —
-    * shared by the batch day-loop ([[processDay]]) and the streaming sink
-    * ([[IngestStream]]). Wrapping key fetched ONCE per invocation on the
-    * driver (per day in the batch loop, per micro-batch ≈ per day in the
-    * stream — the reference's per-day SSM hoist, :78).
+  /** The kernel over streamed `(path, content, dayStr)` rows — the
+    * `--streaming` and Kafka sinks ([[IngestStream]]).
     *
     * @param dayDirNormFor maps a day string to the normalized directory
     *        prefix stripped from file paths when forming object keys
     * @return (okCount, failedCount, bounded failure samples, max day seen)
     */
   private[ingest] def uploadFiles(
-      files: org.apache.spark.sql.Dataset[(String, Array[Byte], String)],
+      files: Dataset[(String, Array[Byte], String)],
       cfg: IngestConfig,
       dayDirNormFor: String => String
   ): (Long, Long, Seq[FileResult], Option[String]) = {
     import files.sparkSession.implicits._
+    val kernel = uploadKernel(cfg, dayDirNormFor)
+    val perDay = mergeDays(
+      files.mapPartitions(it => kernel(it.map { case (path, content, day) => (path, day, () => content) })).collect()
+    )
+    val all = perDay.values
+    (all.map(_._1).sum, all.map(_._2).sum, all.flatMap(_._3).toSeq.sortBy(_.path).take(MaxFailureSamples),
+      perDay.keys.maxOption)
+  }
+
+  /** The ONE executor-side compress→envelope-encrypt→put loop, shared by
+    * every ingest mode, as a per-partition function over
+    * `(path, dayStr, content)`. Content is a thunk, forced inside the
+    * per-file `try`: one bad file (unreadable, unencryptable, unputtable)
+    * is counted and sampled while every sibling is still attempted
+    * (:96-104); only [[TransientCredentialsException]] aborts the task
+    * (and the run) so [[IngestCli]] can exit clean for the scheduler to
+    * retry (:303-308). The wrapping key is fetched ONCE per call on the
+    * driver (per day in the day loop — the reference's per-day SSM hoist,
+    * :78), parsed once per task, with one store client per task.
+    *
+    * @return one `(day, ok, failed, failure samples)` row per day the
+    *         partition touched
+    */
+  private def uploadKernel(
+      cfg: IngestConfig,
+      dayDirNormFor: String => String
+  ): Iterator[(String, String, () => Array[Byte])] => Iterator[(String, Long, Long, Seq[FileResult])] = {
     val prefix = cfg.s3Prefix
     val keyId = cfg.masterKeyId
-    val pubB64 = cfg.wrappingKeyB64() // per-day fetch (ref :78)
+    val pubB64 = cfg.wrappingKeyB64()
     val mode = cfg.aesMode
     val factory: ObjectStoreFactory = RetryingObjectStoreFactory(cfg.storeFactory, cfg.putRetries)
     val maxSamples = MaxFailureSamples
-
-    val perTask = files.mapPartitions { it =>
-      // Per-partition init: parse key once, one store client per task —
-      // the loop-invariant hoisting the reference does per day (:78).
+    files => {
       val pubKey = Envelope.publicKeyFromBase64(pubB64)
       val store = factory.create()
-      var ok = 0L
-      var failed = 0L
-      var maxDay = "" // ISO dates sort lexicographically = chronologically
-      val samples = scala.collection.mutable.ArrayBuffer[FileResult]()
-      it.foreach { case (path, content, dayStr) =>
+      val acc = mutable.LinkedHashMap[String, (Array[Long], mutable.ArrayBuffer[FileResult])]()
+      files.foreach { case (path, dayStr, content) =>
         val key = s"$prefix$dayStr/${relativePath(dayDirNormFor(dayStr), path)}.gz.enc"
-        if (dayStr > maxDay) maxDay = dayStr
+        val (counts, samples) = acc.getOrElseUpdate(dayStr, (new Array[Long](2), mutable.ArrayBuffer()))
         try {
-          val obj = Envelope.encrypt(Zlib.compress(content), pubKey, keyId, mode)
+          val obj = Envelope.encrypt(Zlib.compress(content()), pubKey, keyId, mode)
           store.put(key, obj.ciphertext, obj.metadata)
-          ok += 1
+          counts(0) += 1
         } catch {
           case e: TransientCredentialsException => throw e // abort run; CLI exits clean (ref :303-308)
           case e: Throwable =>
-            failed += 1
+            counts(1) += 1
             if (samples.size < maxSamples) samples += FileResult(path, key, ok = false, error = e.toString)
         }
       }
-      Iterator.single((ok, failed, samples.toSeq, maxDay))
+      acc.iterator.map { case (day, (counts, samples)) => (day, counts(0), counts(1), samples.toSeq) }
     }
-    val parts = perTask.collect() // ONE small row per task, never per file
-    (
-      parts.iterator.map(_._1).sum,
-      parts.iterator.map(_._2).sum,
-      parts.iterator.flatMap(_._3).toSeq.sortBy(_.path).take(MaxFailureSamples),
-      parts.iterator.map(_._4).filter(_.nonEmpty).maxOption
-    )
   }
 
-  /** Backlog-mode upload: same executor-side encrypt+put loop as
-    * [[uploadFiles]], but statuses aggregate PER DAY within each task, so
-    * the day-ordered commit can tell clean days from dirty ones after one
-    * job. Driver gather is O(#tasks × #days-touched-per-task) tiny rows.
+  /** Driver-side merge of the kernel's per-task rows into one tally per
+    * day; the gather is O(#tasks × #days-touched-per-task) tiny rows.
     */
-  private[ingest] def uploadFilesPerDay(
-      files: org.apache.spark.sql.Dataset[(String, Array[Byte], String)],
-      cfg: IngestConfig,
-      dayDirNormFor: String => String
-  ): Map[String, (Long, Long, Seq[FileResult])] = {
-    import files.sparkSession.implicits._
-    val prefix = cfg.s3Prefix
-    val keyId = cfg.masterKeyId
-    val pubB64 = cfg.wrappingKeyB64() // once per run (see runBacklog scaladoc)
-    val mode = cfg.aesMode
-    val factory: ObjectStoreFactory = RetryingObjectStoreFactory(cfg.storeFactory, cfg.putRetries)
-    val maxSamples = MaxFailureSamples
-
-    val perTaskDay = files.mapPartitions { it =>
-      val pubKey = Envelope.publicKeyFromBase64(pubB64)
-      val store = factory.create()
-      val acc = scala.collection.mutable.LinkedHashMap[String, (Long, Long, scala.collection.mutable.ArrayBuffer[FileResult])]()
-      it.foreach { case (path, content, dayStr) =>
-        val key = s"$prefix$dayStr/${relativePath(dayDirNormFor(dayStr), path)}.gz.enc"
-        val entry = acc.getOrElseUpdate(dayStr, (0L, 0L, scala.collection.mutable.ArrayBuffer[FileResult]()))
-        try {
-          val obj = Envelope.encrypt(Zlib.compress(content), pubKey, keyId, mode)
-          store.put(key, obj.ciphertext, obj.metadata)
-          acc(dayStr) = (entry._1 + 1, entry._2, entry._3)
-        } catch {
-          case e: TransientCredentialsException => throw e // abort run; CLI exits clean (ref :303-308)
-          case e: Throwable =>
-            if (entry._3.size < maxSamples) entry._3 += FileResult(path, key, ok = false, error = e.toString)
-            acc(dayStr) = (entry._1, entry._2 + 1, entry._3)
-        }
-      }
-      acc.iterator.map { case (day, (ok, failed, samples)) => (day, ok, failed, samples.toSeq) }
+  private def mergeDays(rows: Array[(String, Long, Long, Seq[FileResult])]): Map[String, Tally] =
+    rows.groupBy(_._1).map { case (day, rs) =>
+      day -> (rs.map(_._2).sum, rs.map(_._3).sum, rs.flatMap(_._4).toSeq.sortBy(_.path).take(MaxFailureSamples))
     }
-    perTaskDay
-      .collect()
-      .groupBy(_._1)
-      .map { case (day, rows) =>
-        day -> (
-          rows.iterator.map(_._2).sum,
-          rows.iterator.map(_._3).sum,
-          rows.iterator.flatMap(_._4).toSeq.sortBy(_.path).take(MaxFailureSamples)
-        )
-      }
-  }
 }

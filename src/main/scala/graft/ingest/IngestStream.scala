@@ -12,7 +12,7 @@ import org.slf4j.LoggerFactory
   *
   * Shape: `readStream.format("graft-audit")` admits one pending day per
   * micro-batch (oldest first); `foreachBatch` runs the same executor-side
-  * compress→envelope-encrypt→put loop as the batch day-loop
+  * compress→envelope-encrypt→put kernel as the batch day-loop
   * ([[IngestJob.uploadFiles]]); `Trigger.AvailableNow` drains the backlog
   * then terminates. The checkpointed offset log IS the watermark — a
   * restart resumes from the last committed day — and each committed day is
@@ -117,15 +117,17 @@ object IngestStream {
 
   private[ingest] def processKafkaBatch(cfg: IngestConfig, batch: DataFrame, batchId: Long): Unit = {
     import batch.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{col, concat_ws, date_format}
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, concat_ws, count, date_format, when}
     // Tombstones (null value — Kafka's delete marker for compacted
     // topics) carry no payload to ingest; dropping them here keeps
-    // Zlib.compress from NPEing and the batch from wedging on retry.
-    val live = batch.where(col("value").isNotNull)
-    val tombstones = batch.where(col("value").isNull).count()
-    if (tombstones > 0)
-      log.info(s"Kafka batch $batchId: skipped $tombstones tombstone record(s) (null value)")
-    val records = live
+    // Zlib.compress from NPEing and the batch from wedging on retry. They
+    // are counted by an observation on the upload pass itself, so the
+    // batch is read once.
+    val tombstones = Observation(s"kafka-tombstones-$batchId")
+    val records = batch
+      .observe(tombstones, count(when(col("value").isNull, 1)).as("n"))
+      .where(col("value").isNotNull)
       .select(
         // no '/' in the synthesized name: uploadFiles keys on the last
         // path segment, and the record coordinates must survive whole
@@ -135,6 +137,9 @@ object IngestStream {
       )
       .as[(String, Array[Byte], String)]
     val (ok, failed, samples, _) = IngestJob.uploadFiles(records, cfg, _ => "")
+    val skipped = tombstones.get("n").asInstanceOf[Long]
+    if (skipped > 0)
+      log.info(s"Kafka batch $batchId: skipped $skipped tombstone record(s) (null value)")
     if (failed > 0) {
       val detail = samples.map(f => s"${f.path}: ${f.error}").mkString("; ")
       throw new RuntimeException(s"Kafka batch $batchId: $failed record(s) failed: $detail")

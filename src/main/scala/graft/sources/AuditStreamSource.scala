@@ -2,7 +2,6 @@ package graft.sources
 
 import java.time.LocalDate
 import java.util
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -50,9 +49,10 @@ import graft.ingest.{AuditSource, Watermark}
   * (path, length) for the ONE day being admitted; content bytes are read
   * by executors straight from the source filesystem. Files are bin-packed
   * into input partitions by size (`maxPartitionBytes`, default 128 MiB) —
-  * parallelism scales with day bytes, not file count, and zero-length
-  * files are included (the custom reader has no scan that drops them,
-  * unlike `binaryFile` — see [[AuditSource.readDay]]).
+  * parallelism scales with day bytes, not file count. The listing and
+  * the whole-file reader are the day loop's own ([[AuditSource.listFiles]],
+  * [[AuditSource.readFile]]), so every mode lands the same files:
+  * every regular file, zero-length and hidden names included.
   */
 class AuditStreamSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-audit"
@@ -233,20 +233,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
   }
 
   private def planDays(days: Seq[graft.ingest.DayPartition], range: String): Array[InputPartition] = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val files = days.flatMap { dp =>
-      val p = new Path(dp.path)
-      val fs = p.getFileSystem(hadoopConf)
-      val it = fs.listFiles(p, /* recursive = */ true)
-      val epochDay = dp.day.toEpochDay.toInt
-      Iterator
-        .continually(it)
-        .takeWhile(_.hasNext)
-        .map(_.next())
-        .filter(_.isFile)
-        .map(st => (st.getPath.toString, st.getLen, epochDay))
-        .toSeq
-    }
+    val files = AuditSource.listFiles(spark.sparkContext.hadoopConfiguration, days)
     val bins = AuditMicroBatchStream.binPack(files, maxPartitionBytes)
     log.info(s"Batch $range: ${files.size} file(s) in ${bins.length} partition(s)")
     bins.map(b => AuditFilesPartition(b): InputPartition)
@@ -268,7 +255,7 @@ private[sources] class AuditMicroBatchStream(srcDir: String, options: CaseInsens
   override def stop(): Unit = ()
 }
 
-private[sources] object AuditMicroBatchStream {
+private[graft] object AuditMicroBatchStream {
 
   /** Best-fit-decreasing bin-packing by file size, O(n log bins) via a
     * remaining-capacity index — a first-fit linear scan over bins is
@@ -277,7 +264,7 @@ private[sources] object AuditMicroBatchStream {
     * own bin; packing quality: one huge file never drags a long tail of
     * small ones into its task.
     */
-  private[sources] def binPack(
+  private[graft] def binPack(
       files: Seq[(String, Long, Int)],
       cap: Long
   ): Array[Seq[(String, Long, Int)]] = {
@@ -312,8 +299,8 @@ private[sources] case class AuditPartitionReaderFactory(conf: SerializableConfig
     new AuditFileReader(partition.asInstanceOf[AuditFilesPartition], conf)
 }
 
-/** Reads each whole file into one row; one open stream at a time, constant
-  * memory beyond the current file's bytes.
+/** Reads each whole file into one row ([[AuditSource.readFile]]); one
+  * open stream at a time, constant memory beyond the current file's bytes.
   */
 private[sources] class AuditFileReader(partition: AuditFilesPartition, conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
@@ -323,22 +310,7 @@ private[sources] class AuditFileReader(partition: AuditFilesPartition, conf: Ser
   override def next(): Boolean = {
     if (!it.hasNext) return false
     val (pathStr, len, epochDay) = it.next()
-    // One file = one row = one in-memory byte array (the reference reads
-    // whole files too, audit_data_ingest.py:118); fail loudly rather than
-    // silently truncating past the JVM array limit.
-    require(len <= Int.MaxValue, s"$pathStr is $len bytes — exceeds the 2 GiB single-row limit")
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf.value)
-    val buf = new Array[Byte](len.toInt)
-    val in = fs.open(path)
-    try {
-      var off = 0
-      while (off < buf.length) {
-        val n = in.read(buf, off, buf.length - off)
-        if (n < 0) throw new java.io.EOFException(s"$pathStr truncated at $off/${buf.length}")
-        off += n
-      }
-    } finally in.close()
+    val buf = AuditSource.readFile(conf.value, pathStr, len)
     current = new GenericInternalRow(Array[Any](UTF8String.fromString(pathStr), buf, epochDay))
     true
   }

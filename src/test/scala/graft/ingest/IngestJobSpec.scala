@@ -17,6 +17,16 @@ final case class PoisonedStoreFactory(root: String) extends ObjectStoreFactory {
   }
 }
 
+/** Deletes `victim` from the source whenever a task opens its store —
+  * after the driver listed the day, before that task reads any file.
+  */
+final case class VanishingSourceStoreFactory(root: String, victim: String) extends ObjectStoreFactory {
+  override def create(): ObjectStore = {
+    Files.deleteIfExists(java.nio.file.Paths.get(victim))
+    new LocalDirObjectStore(root)
+  }
+}
+
 /** E2E mirror of the reference's test_hello (tests/test_audit_data_ingest.py:18-26)
   * with the stronger round-trip assertion FIXTURES.md §1.4 calls for.
   */
@@ -59,29 +69,84 @@ class IngestJobSpec extends AnyFunSuite {
       progressFile = progress.toString
     )
 
-  test("runBacklog: whole 3-day backlog lands in ONE Spark job, watermark committed day-ordered") {
-    val (src, contents) = makeSource()
-    val out = Files.createTempDirectory("backlog-out")
-    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
-    val cfg = cfgFor(src, out, progress)
-
+  /** Runs `body` and counts the Spark jobs it started. */
+  private def countingJobs[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    val summary =
-      try IngestJob.runBacklog(spark, cfg)
+    val out =
+      try body
       finally {
         Thread.sleep(2000) // let the async listener bus drain
         spark.sparkContext.removeSparkListener(listener)
       }
+    (out, jobs.get())
+  }
+
+  test("run: the 3-day fixture schedules exactly 3 Spark jobs, one per day and nothing else") {
+    val (src, _) = makeSource()
+    val out = Files.createTempDirectory("audit-out")
+    val cfg = cfgFor(src, out, Files.createTempDirectory("wm").resolve("progress.txt"))
+    val (summary, jobs) = countingJobs(IngestJob.run(spark, cfg))
+    assert(summary.filesOk == 15)
+    assert(jobs == 3, s"day loop scheduled $jobs Spark job(s) for 3 days; expected exactly 3")
+  }
+
+  test("every regular file lands, hidden and zero-length names included, in run, runBacklog and the stream") {
+    val (src, contents) = makeSource()
+    val day = src.resolve("2020-10-11")
+    Files.write(day.resolve(".hidden"), "not skipped".getBytes)
+    Files.write(day.resolve(".empty"), Array.emptyByteArray)
+    Files.write(day.resolve("_SUCCESS"), Array.emptyByteArray)
+    val expected = contents.keySet.map(rel => s"audit/$rel.gz.enc") ++
+      Seq(".hidden", ".empty", "_SUCCESS").map(n => s"audit/2020-10-11/$n.gz.enc")
+
+    def landedBy(ingest: IngestConfig => Unit): Set[String] = {
+      val cfg = cfgFor(src, Files.createTempDirectory("audit-out"), Files.createTempDirectory("wm").resolve("p.txt"))
+      ingest(cfg)
+      val store = cfg.storeFactory.create()
+      val k = "audit/2020-10-11/.hidden.gz.enc"
+      val plain = Zlib.decompress(Envelope.decrypt(EncryptedObject(store.get(k), store.getMetadata(k)), priv))
+      assert(new String(plain) == "not skipped")
+      store.listKeys("audit/").toSet
+    }
+    assert(landedBy(cfg => IngestJob.run(spark, cfg)) == expected)
+    assert(landedBy(cfg => IngestJob.runBacklog(spark, cfg)) == expected)
+    assert(landedBy(cfg =>
+      IngestStream.runAvailableNow(spark, cfg, Files.createTempDirectory("ckpt").toString)) == expected)
+  }
+
+  test("a file that vanishes between listing and read fails its day, not its task; siblings land") {
+    val (src, _) = makeSource()
+    val victim = src.resolve("2020-10-10").resolve("vanish.json")
+    Files.write(victim, "here at listing time".getBytes)
+    val out = Files.createTempDirectory("audit-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    val cfg = cfgFor(src, out, progress)
+      .copy(storeFactory = VanishingSourceStoreFactory(out.toString, victim.toString))
+
+    val e = intercept[RuntimeException](IngestJob.run(spark, cfg))
+    assert(e.getMessage.contains("Failed to process day 2020-10-10 (1 file(s) failed)"), e.getMessage)
+    assert(e.getMessage.contains("vanish.json") && e.getMessage.contains("FileNotFoundException"), e.getMessage)
+    assert(LocalDirObjectStoreFactory(out.toString).create().listKeys("audit/2020-10-10/").size == 5)
+    assert(Watermark.read(progress.toString).isEmpty)
+  }
+
+  test("runBacklog: whole 3-day backlog lands in ONE Spark job, watermark committed day-ordered") {
+    val (src, contents) = makeSource()
+    val out = Files.createTempDirectory("backlog-out")
+    val progress = Files.createTempDirectory("wm").resolve("progress.txt")
+    val cfg = cfgFor(src, out, progress)
+
+    val (summary, jobs) = countingJobs(IngestJob.runBacklog(spark, cfg))
 
     assert(summary.days.map(_.day.toString) == Seq("2020-10-10", "2020-10-11", "2020-10-12"))
     assert(summary.filesOk == 15)
     assert(Watermark.read(cfg.progressFile).contains(LocalDate.parse("2020-10-12")))
-    assert(jobs.get() == 1, s"backlog scheduled ${jobs.get()} Spark job(s); expected exactly 1")
+    assert(jobs == 1, s"backlog scheduled $jobs Spark job(s); expected exactly 1")
 
     // layout + content parity with the day-loop, incl. the 0-byte file
     val store = cfg.storeFactory.create()
